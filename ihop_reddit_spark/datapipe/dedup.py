@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..caching import register_scoped_persists
+from ..caching import register_scoped_persists, release_scoped_persists
 from ..functions.text import fingerprint, simhash64
 
 
@@ -636,6 +636,15 @@ def duplicate_components(
     an explicit size guard — the same driver-drop discipline as the
     reference's ≤10k-point sklearn stages.
 
+    Under the guard the call is TWO actions whatever the graph's shape:
+    the guard ``count`` and one Arrow collect of the two id columns; the
+    result goes back through an Arrow table (``createDataFrame`` of a
+    ``pyarrow.Table`` is Arrow-backed in every session, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says). The distributed
+    loops pay a fixed driver cost per round — plan building, the lazy
+    checkpoint's shuffle stages, the fingerprint collect — which is the
+    whole cost at the pair counts a driver can hold.
+
     Past the guard the call AUTO-ROUTES to the distributed star-contraction
     implementation (:func:`duplicate_components_star` — O(log n) rounds,
     property-tested equal to the union-find) instead of failing: at 100 TB
@@ -643,11 +652,16 @@ def duplicate_components(
     response is a plan change, not an abort mid-pipeline. Pass
     ``on_overflow="raise"`` to restore the hard guard (e.g. in contexts
     where an unexpectedly huge pair list signals an upstream bug).
+
+    Either path consumes the input plan in full, so any scoped persists
+    registered on ``pairs`` (the shingle stream of
+    :func:`ngram_jaccard_pairs`) are RELEASED here, as in
+    :func:`duplicate_components_star`.
     """
     if on_overflow not in ("distribute", "raise"):
         raise ValueError(f"on_overflow must be distribute|raise, got {on_overflow!r}")
     # the pair lineage (usually a similarity join) is consumed by TWO actions
-    # (guard count + edge iteration) — persist across them, drop after
+    # (guard count + edge collect) — persist across them, drop after
     pairs = pairs.persist()
     cnt = pairs.count()
     if cnt > max_driver_pairs:
@@ -661,6 +675,9 @@ def duplicate_components(
             f"duplicate_components: {cnt} pairs exceed the driver guard "
             f"({max_driver_pairs}); use an iterative CC implementation"
         )
+    edges = pairs.select("left_id", "right_id").toArrow()
+    release_scoped_persists(pairs)
+    pairs.unpersist()
     parent: dict = {}
 
     def find(x):
@@ -669,19 +686,23 @@ def duplicate_components(
             x = parent[x]
         return x
 
-    for row in pairs.select("left_id", "right_id").toLocalIterator():
-        a, b = row[0], row[1]
+    for a, b in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
         for v in (a, b):
             parent.setdefault(v, v)
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    rows = [(v, find(v)) for v in parent]
-    spark = pairs.sparkSession
-    pairs.unpersist()
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
+    docs = list(parent)
+    arrow_type = edges.schema.field(0).type
+    table = pa.table(
+        {
+            "doc_id": pa.array(docs, arrow_type),
+            "component_id": pa.array([find(v) for v in docs], arrow_type),
+        }
+    )
     id_type = pairs.schema["left_id"].dataType
     schema = T.StructType(
         [
@@ -689,7 +710,7 @@ def duplicate_components(
             T.StructField("component_id", id_type, False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return pairs.sparkSession.createDataFrame(table, schema)
 
 
 def duplicate_components_distributed(
@@ -705,8 +726,8 @@ def duplicate_components_distributed(
     cluster is near-clique), so this converges in a handful of iterations;
     each is one shuffle-join + one aggregation.
 
-    Lineage discipline: each iteration's frontier is cut with
-    ``localCheckpoint(eager=True)`` — ``persist()`` alone caches partitions
+    Lineage discipline: each batch of iterations is cut with a lazy
+    ``localCheckpoint(eager=False)`` — ``persist()`` alone caches partitions
     but leaves the LOGICAL plan nested one level deeper per iteration
     (geometric plan growth; the driver OOMs just stringifying the plan long
     before any data pressure). Checkpoint blocks from superseded iterations
@@ -737,7 +758,6 @@ def duplicate_components_distributed(
     # it (and `edges`' persist) in the same job — the scoped persists the
     # caller's pairs carried are released only after that first action,
     # preserving the ownership hand-off duplicate_components_star pins
-    from ..caching import release_scoped_persists
 
     # same convergence discipline as duplicate_components_star: a
     # (count, decimal hash-sum) fingerprint per round, with the exact
@@ -775,7 +795,7 @@ def duplicate_components_distributed(
 
     # BATCHED iterations (r15, same shape and argument as the star
     # loop): two propagation steps compose lazily per checkpoint, so
-    # the eager-checkpoint + fingerprint-collect fixed cost is paid
+    # the checkpoint + fingerprint-collect fixed cost is paid
     # every other step; labels only ever decrease, so a fixpoint of the
     # composed map is a fixpoint of one step, the label SEQUENCE is
     # unchanged, and the exact changed-rows confirmation still gates
@@ -784,13 +804,14 @@ def duplicate_components_distributed(
     prev_fp = _fingerprint(labels)  # materializes the initial checkpoint
     release_scoped_persists(pairs)
     done = 0
+    changed = None  # bound only once a fingerprint reports a fixed point
     while done < max_iterations:
         new_labels = labels
         for _ in range(min(rounds_per_check, max_iterations - done)):
             new_labels = _propagate(new_labels)
             done += 1
         new_labels = new_labels.localCheckpoint(eager=False)
-        fp = _fingerprint(new_labels)  # one job: materialize + fingerprint
+        fp = _fingerprint(new_labels)  # finishes the checkpoint + fingerprints
         if fp == prev_fp:
             changed = (
                 new_labels.alias("n")
@@ -805,9 +826,10 @@ def duplicate_components_distributed(
         labels = new_labels
     else:
         edges.unpersist()
+        still = "" if changed is None else f" ({changed} labels still changing)"
         raise RuntimeError(
             f"duplicate_components_distributed did not converge within "
-            f"{max_iterations} iterations ({changed} labels still changing); "
+            f"{max_iterations} iterations{still}; "
             "raise max_iterations (diameter-long duplicate chains)"
         )
     edges.unpersist()
@@ -922,15 +944,16 @@ def duplicate_components_star(
     rounds REGARDLESS of diameter, so it wins on chain-shaped duplicate
     graphs (e.g. drifting near-dups A~B~C~...~Z where consecutive versions
     match but distant ones don't). Each round is two window shuffles +
-    distinct; lineage is cut per round with ``localCheckpoint`` (same
-    discipline as the min-label loop — persist alone grows the plan
-    geometrically). The tests pin both the union-find equivalence and the
-    round-count advantage on a long path graph.
+    distinct; lineage is cut every two rounds with a lazy
+    ``localCheckpoint`` (same discipline as the min-label loop — persist
+    alone grows the plan geometrically). The tests pin both the
+    union-find equivalence and the round-count advantage on a long path
+    graph.
 
     EAGER: the ``pairs`` plan runs during CONSTRUCTION (the initial
-    ``localCheckpoint(eager=True)`` plus one materialized round per
-    contraction step) — this is not a lazy operator. Because that first
-    checkpoint fully consumes the input plan, any scoped persists
+    fingerprint materializes the first checkpoint, then every batch of
+    rounds runs) — this is not a lazy operator. Because that first
+    fingerprint fully consumes the input plan, any scoped persists
     registered on ``pairs`` (e.g. the shingle stream cached inside
     ``ngram_jaccard_pairs``) are RELEASED here — they can never be
     re-read through this operator, and leaving them cached leaks
@@ -938,15 +961,16 @@ def duplicate_components_star(
     ``pairs`` object for other consumers afterward recomputes it (or
     persists its own copy before calling).
     """
-    from ..caching import release_scoped_persists
-
-    # LAZY checkpoints throughout this loop (r15): a lazy localCheckpoint
-    # truncates lineage exactly like an eager one, but lets the very next
-    # fingerprint action materialize it — ONE Spark job per step instead
-    # of materialize + fingerprint, on a loop whose cost is all fixed
-    # per-job latency at small graph sizes. The initial fingerprint runs
-    # BEFORE the input's scoped persists are released, so the input plan
-    # still executes against its caches.
+    # LAZY checkpoints throughout this loop: a lazy localCheckpoint
+    # truncates lineage exactly like an eager one and leaves the final
+    # (result) stage to the next fingerprint action. It is NOT one job per
+    # step: under AQE the call itself runs every shuffle stage of the
+    # pending rounds (measured: 6 jobs at call time for a two-round batch,
+    # then 2 for the fingerprint). At small graph sizes that per-round
+    # driver cost is the whole cost, which is why duplicate_components
+    # keeps graphs under its guard on the driver. The initial fingerprint
+    # runs BEFORE the input's scoped persists are released, so the input
+    # plan still executes against its caches.
     edges = (
         pairs.select(
             F.greatest(F.col("left_id"), F.col("right_id")).alias("u"),
@@ -974,7 +998,7 @@ def duplicate_components_star(
 
     # BATCHED rounds (r15, guide §1.2 distributed-algorithm costs): two
     # contraction rounds compose LAZILY between checkpoints, so the
-    # per-materialization fixed cost (eager checkpoint job + fingerprint
+    # per-materialization fixed cost (checkpoint call + fingerprint
     # collect — the dominant term on small graphs) is paid every OTHER
     # round while lineage stays bounded at 2 rounds (6 exchanges).
     # Convergence is unchanged: the round map is deterministic and its
@@ -994,7 +1018,7 @@ def duplicate_components_star(
             nxt = _star_round(nxt)
             rounds += 1
         nxt = nxt.localCheckpoint(eager=False)
-        fp = _fingerprint(nxt)  # one job: materializes AND fingerprints
+        fp = _fingerprint(nxt)  # finishes the checkpoint AND fingerprints
         if fp == prev_fp and not (
             nxt.exceptAll(edges).limit(1).count()
             or edges.exceptAll(nxt).limit(1).count()
@@ -1018,6 +1042,7 @@ def duplicate_components_star(
     )
     out = nodes.unionByName(roots).distinct()
     out._cc_rounds = rounds  # observability for tests/benchmarks
+    out._cc_edges = edges  # the converged star graph (tests pin its fixpoint)
     return out
 
 

@@ -383,6 +383,89 @@ def test_duplicate_components_union_find(spark):
         duplicate_components(pairs, max_driver_pairs=2, on_overflow="raise")
 
 
+def test_duplicate_components_router_matches_star(spark):
+    """The size-guarded router is the production components path
+    (component_split_assign): under the guard its driver union-find must
+    equal star contraction on long AND string ids, keep the id type and
+    the non-null schema, return 0 rows for 0 pairs, and past the guard
+    route to the star loop with the same rows."""
+    from ihop_reddit_spark.datapipe.dedup import (
+        _star_round,
+        duplicate_components,
+        duplicate_components_star,
+    )
+
+    def rows(df):
+        return {(r["doc_id"], r["component_id"]) for r in df.collect()}
+
+    edges = [(1, 2), (2, 3), (7, 9), (4, 1), (10, 11), (12, 11)]
+    expected = {
+        (1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (9, 7),
+        (10, 10), (11, 10), (12, 10),
+    }
+    for ddl, key in (("bigint", int), ("string", lambda i: f"d{i:02d}")):
+        pairs = spark.createDataFrame(
+            [(key(a), key(b)) for a, b in edges],
+            f"left_id {ddl}, right_id {ddl}",
+        )
+        routed = duplicate_components(pairs)
+        assert [(f.dataType.simpleString(), f.nullable) for f in routed.schema] == [
+            (ddl, False)
+        ] * 2
+        want = {(key(d), key(c)) for d, c in expected}
+        assert rows(routed) == want
+        assert rows(duplicate_components_star(pairs)) == want
+        if ddl == "bigint":
+            assert rows(duplicate_components(pairs, max_driver_pairs=2)) == want
+
+    empty = spark.createDataFrame([], "left_id long, right_id long")
+    assert duplicate_components(empty).count() == 0
+
+    # the batched star loop checks convergence every two rounds; its exit
+    # graph must be a fixpoint of ONE round too (a 2-cycle of the round map
+    # would exit under-contracted)
+    n = 64
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "left_id long, right_id long"
+    )
+    star = duplicate_components_star(chain)
+    assert rows(star) == {(i, 0) for i in range(n)}
+    exit_edges = {(r["u"], r["v"]) for r in star._cc_edges.collect()}
+    assert {(r["u"], r["v"]) for r in _star_round(star._cc_edges).collect()} == exit_edges
+
+
+def test_duplicate_components_releases_scoped_persists(spark):
+    """The router consumes its input plan in full, so the shingle stream
+    ngram_jaccard_pairs persists must be released once the pairs are
+    collected — Spark's cache manager ends the run empty."""
+    from ihop_reddit_spark.datapipe.dedup import (
+        duplicate_components,
+        ngram_jaccard_pairs,
+    )
+
+    spark.catalog.clearCache()
+    base = "the quick brown fox jumps over the lazy dog near the river "
+    rows = [(i, base + f"variant {i % 3}") for i in range(12)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = ngram_jaccard_pairs(df, "text", "doc_id", n=3, threshold=0.5)
+    out = duplicate_components(pairs).collect()
+    assert {r["component_id"] for r in out} == {0}
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), "scoped persists leaked past the router"
+
+
+def test_distributed_components_nonconvergence_raises_runtime_error(spark):
+    """A loop that runs out of iterations before any fingerprint match
+    must raise its RuntimeError, not an UnboundLocalError."""
+    from ihop_reddit_spark.datapipe.dedup import duplicate_components_distributed
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "left_id long, right_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_components_distributed(chain, max_iterations=1)
+
+
 @pytest.mark.slow
 def test_prepare_corpus_stage_semantics(spark):
     from ihop_reddit_spark.plans.corpus_prep import CorpusPrepConfig, prepare_corpus
